@@ -17,7 +17,7 @@ real deployment swaps the two join keys for its caption/image embedding
 tables; every other line is the production shape.
 
 Cross-engine exactness: the cosine is the UNROUNDED double from the
-sequential-fold dot product (simsearch's ``_dot`` ≙ DuckDB ``list_reduce`` —
+sequential-fold dot product (``vectors.dot`` ≙ DuckDB ``list_reduce`` —
 same fold order, bit-equal) over correctly-rounded ``sqrt`` norms, so the
 threshold comparison is not a float seam; the displayed score is rounded for
 output only.  Invalid vectors (NULL/empty/non-finite/zero norm) drop the pair
@@ -36,8 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from alertas_spark.operators.embgate import EMB_VALID_SQL, valid_nrm
-from alertas_spark.operators.simsearch import (_DUCK_DOT, _DUCK_NORM2, _dot,
-                                               _norm2)
+from alertas_spark.operators.simsearch import _DUCK_DOT, _DUCK_NORM2
+from alertas_spark.operators.vectors import dot, norm2
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -72,7 +72,7 @@ def clip_pairs(spark: SparkSession, sf_dir: str,
     v = (load_table(spark, sf_dir, "embeddings")
          .select("vec_id",
                  F.col("embedding").cast("array<double>").alias("emb"))
-         .withColumn("nrm", F.sqrt(_norm2(F.col("emb"))))
+         .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
          .filter(valid_nrm(F.col("nrm"))))
     cap = v.select(F.col("vec_id").alias("cap_id"),
                    F.col("emb").alias("cemb"), F.col("nrm").alias("cnrm"))
@@ -86,7 +86,7 @@ def clip_pairs(spark: SparkSession, sf_dir: str,
             .join(img, F.col("img_id")
                   == F.col("doc_id") - (F.col("doc_id") % 2))
             .select("doc_id", "source",
-                    (_dot(F.col("cemb"), F.col("iemb"))
+                    (dot(F.col("cemb"), F.col("iemb"))
                      / (F.col("cnrm") * F.col("inrm"))).alias("cos")))
 
 

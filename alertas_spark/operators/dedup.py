@@ -738,8 +738,8 @@ def _emb_pairs(spark: SparkSession, sf_dir: str, blocked: bool) -> DataFrame:
 
     # Within-block verification as ONE grouped Arrow batch per block: normalize
     # rows, one BLAS matmul, threshold the upper triangle.  Replaces the earlier
-    # within-block self-join whose per-candidate interpreted `aggregate(zip_with)`
-    # dot made verify cost ~1.5 ms/pair (tools/scale_probe.py, 10x run) — the
+    # within-block self-join whose per-candidate interpreted `vectors.dot` fold
+    # made verify cost ~1.5 ms/pair (tools/scale_probe.py, 10x run) — the
     # matmul is the same arithmetic the exact verifier already proves
     # oracle-equal at round-6.  Plan: one shuffle on the block key, no pair
     # relation ever materialized before thresholding.

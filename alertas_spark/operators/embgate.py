@@ -9,8 +9,8 @@ at the load boundary: **a vector participates iff its squared L2 norm is
 finite and strictly positive** (which simultaneously rejects NaN/Inf
 elements, all-zero vectors, and element magnitudes whose squares overflow).
 
-The gate is a JVM expression over the same ``aggregate(transform(...))``
-fold the operators already use for norms — no Python, no extra pass — and
+The gate is a JVM expression over the same ``vectors.norm2`` fold the
+operators already use for norms — no Python, no extra pass — and
 :data:`EMB_VALID_SQL` is its DuckDB mirror for the oracles.
 """
 
@@ -19,11 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def norm2(col: Column) -> Column:
-    """Sequential double fold Σx² (bit-equal to the oracle's list_reduce)."""
-    return F.aggregate(F.transform(col, lambda x: x * x), F.lit(0.0),
-                       lambda acc, x: acc + x)
+from alertas_spark.operators.vectors import norm2
 
 
 def valid_vec(col: Column) -> Column:

@@ -11,13 +11,14 @@ re-runs):
   contract) — the one step where naive double summation would diverge between
   partitionings and engines.
 
-Scale shape per iteration: one 1-row broadcast of the packed centroid array
-(K×dim doubles are always tiny), the argmin evaluated INSIDE the scan
-projection (zero exchange — r18; the former crossJoin + vec_id-window shape
-shuffled a full copy of every embedding per round), and one (cluster, dim)
-aggregation with map-side combine.  The loop structure is exactly
-GraphX/Spark-ML's kmeans; the decimal-sum means are the price of cross-engine
-bit-equality and cost one extra cast.
+Scale shape per iteration: the K centroids (K×dim doubles, always tiny)
+come to the driver as one bounded pull and go back into the plan as a
+constant-folded literal (operators/vectors.py), the argmin is evaluated
+INSIDE the scan projection (zero exchange — r18; the former crossJoin +
+vec_id-window shape shuffled a full copy of every embedding per round), and
+one (cluster, dim) aggregation with map-side combine.  The loop structure is
+exactly GraphX/Spark-ML's kmeans; the decimal-sum means are the price of
+cross-engine bit-equality and cost one extra cast.
 
 The trained assignment feeds ``simsearch_topk_ivf`` / the blocked dedup as their
 coarse partition — closing the loop from raw embeddings to a *trained* IVF index
@@ -31,6 +32,8 @@ from pyspark.sql import functions as F
 
 from alertas_spark.operators.artifacts import bounded_rows, persistent_artifact
 from alertas_spark.operators.embgate import EMB_VALID_SQL, valid_embeddings
+from alertas_spark.operators.vectors import (dot, lit_centroid_array, nearest,
+                                             norm2)
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -80,89 +83,20 @@ _DUCK_ORACLE = f"""
 """
 
 
-#: argmin over the packed centroid array, evaluated scan-side: per vector,
-#: build (dist, cid) structs for every centroid with a higher-order
-#: ``transform`` and take ``array_min`` — structs compare field-by-field, so
-#: the minimum IS (lowest dist, ties to lowest cid), the oracle's
-#: ROW_NUMBER() ORDER BY dist, cid tiebreak, bit-identical.  ``cs_expr`` is
-#: either the packed broadcast column or a constant-folded literal array;
-#: ``with_cvec`` carries the winning centroid's vector on the struct (a
-#: third tiebreak field never consulted — cid is unique), so residual
-#: consumers need no join-back against the centroid table.
-def _spark_best(cs_expr: str, with_cvec: bool = False) -> str:
-    cvec = ", 'cvec', c.cvec" if with_cvec else ""
-    return (f"array_min(transform({cs_expr}, c -> named_struct("
-            "'dist', aggregate(zip_with(emb, c.cvec, "
-            "(x, ce) -> (x - ce) * (x - ce)), "
-            "cast(0.0 as double), (acc, v) -> acc + v), "
-            f"'cid', c.cid{cvec})))")
-
-
-_SPARK_BEST = _spark_best("cs")
-
-
-def dlit(x: float) -> str:
-    """SQL double literal reproducing the exact binary64 value: ``repr`` is
-    the shortest round-trip decimal, and both Spark's parser and
-    ``Double.parseDouble`` reconstruct the identical double from it."""
-    return repr(float(x)) + "D"
-
-
-def lit_centroid_array(rows, cid_suffix: str = "L") -> str:
-    """The K trained centroids as ONE literal ``array<struct<cid, cvec>>``
-    SQL expression (constant-folded by Catalyst into a single Literal):
-    consumers evaluate the argmin against a CONSTANT — no pack aggregation,
-    no BroadcastExchange job, no join.  Element order is sorted by cid for
-    reproducibility; min-over-set is order-independent."""
-    items = ", ".join(
-        f"named_struct('cid', {int(r['cid'])}{cid_suffix}, "
-        f"'cvec', array({', '.join(dlit(x) for x in r['cvec'])}))"
-        for r in sorted(rows, key=lambda r: r["cid"]))
-    return f"array({items})"
-
-
-def _assign(emb: DataFrame, centroids, with_cvec: bool = False) -> DataFrame:
-    # ZERO-exchange assignment: the K centroids collapse to ONE broadcast row
-    # holding an array of (cid, cvec) structs, and the argmin runs inside the
-    # scan projection (``_spark_best``).  The former shape — crossJoin each
+def _assign(emb: DataFrame, centroids: list,
+            with_cvec: bool = False) -> DataFrame:
+    # ZERO-exchange assignment: the driver-held centroid rows bake into ONE
+    # constant-folded literal array and the argmin runs inside the scan
+    # projection (vectors.nearest) — no pack aggregation, no
+    # BroadcastExchange job, no join.  The former shape — crossJoin each
     # vector against all K centroids, then argmin via a vec_id window —
     # shuffled and sorted one full copy of every embedding per Lloyd round
     # (measured at sf0.1: 2,000 records / 820 KB per round, the dominant
-    # exchange of the trainer); here assignment is a narrow projection and
-    # the only exchanges left in a round are the tiny (cid, dim) mean
-    # partials.  min-over-set is order-independent, so the unordered
-    # collect_list is deterministic in the result.
-    #
-    # ``centroids`` is a DataFrame only for the seed round (c0 rides the
-    # corpus scan lazily); DRIVER-HELD rows (post-update rounds, the trained
-    # coarse-centroid artifact) become a constant-folded LITERAL array
-    # instead — no pack aggregation, no BroadcastExchange job, no join
-    # (the trainer chains are job-count-bound; artifacts.bounded_rows).
-    #
-    # ``cid`` is coalesced against a sentinel that never occurs: the argmin
-    # over a non-empty centroid set is never null, so values are identical —
-    # but the coalesce makes the COLUMN non-nullable, so downstream joins on
-    # cid generate NO inferred isnotnull constraint.  Without it, Catalyst
-    # rewrites the inferred filter through this projection and re-evaluates
-    # the ENTIRE argmin chain per row a second time (measured: the IVFADC
-    # scorer went 13.3 s → 1.1 s at sf0.1 when the inference died).
-    out = ["vec_id", "emb",
-           F.coalesce(F.col("best.cid"), F.lit(-1)).alias("cid"),
-           F.col("best.dist").alias("dist")]
-    if with_cvec:
-        out.append(F.col("best.cvec").alias("cvec"))
-    if isinstance(centroids, list):
-        return (emb.withColumn(
-            "best", F.expr(_spark_best(lit_centroid_array(centroids),
-                                       with_cvec)))
-            .select(*out))
-    cs = centroids.groupBy().agg(
-        F.collect_list(F.struct("cid", "cvec")).alias("cs"))
-    return (
-        emb.crossJoin(F.broadcast(cs))
-        .withColumn("best", F.expr(_spark_best("cs", with_cvec)))
-        .select(*out)
-    )
+    # exchange of the trainer); here the only exchanges left in a round are
+    # the tiny (cid, dim) mean partials.  ``with_cvec`` carries the winning
+    # centroid's vector, so residual consumers need no join-back.
+    return nearest(emb, "emb", F.expr(lit_centroid_array(centroids)), "cid",
+                   with_cvec)
 
 
 def _update(assigned: DataFrame) -> DataFrame:
@@ -188,25 +122,39 @@ def _update(assigned: DataFrame) -> DataFrame:
     )
 
 
+def lloyd(v: DataFrame, k: int, rounds: int) -> DataFrame:
+    """``(vec_id, emb, cid, dist)`` after ``rounds`` assignment passes of
+    deterministic Lloyd — the one k-means loop (``kmeans_assign``,
+    :func:`trained_assignment` and pq's coarse quantizer).  The seed
+    centroid ``cid`` is the vector ``vec_id == cid`` for the first ``k`` ids
+    (seeded, not sampled), one bounded pull whose ``vec_id`` filter rides
+    into the parquet scan.  Between passes the updated centroids come to the
+    driver (bounded by model geometry): that collect IS the round's one
+    materializing action — the former localCheckpoint cost the same job but
+    left a checkpoint-backed table whose pack + broadcast submitted ANOTHER
+    job per consumer; literal centroids make every assign a pure projection
+    that also truncates the deep lineage."""
+    seeds = bounded_rows(
+        v.filter(F.col("vec_id") < k).select(
+            F.col("vec_id").alias("cid"), F.col("emb").alias("cvec")),
+        k, "kmeans_c0")
+    assigned = _assign(v, seeds)
+    for _ in range(rounds - 1):
+        assigned = _assign(v, bounded_rows(_update(assigned), k, "kmeans_c1"))
+    return assigned
+
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return valid_embeddings(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
+
+
 @declare("kmeans_assign", oracle=_DUCK_ORACLE,
          late=True)  # green r2 driver row + in-window simsearch_topk_ivf_trained re-runs this exact quantizer
 def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train an IVF coarse quantizer with {ITERS} deterministic Lloyd iterations and
     return the final cluster assignment (+ L2² distance) per vector."""
-    v = valid_embeddings(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-    centroids = v.filter(F.col("vec_id") < K).select(
-        F.col("vec_id").alias("cid"), F.col("emb").alias("cvec"))
-    assigned = _assign(v, centroids)
-    for _ in range(ITERS - 1):
-        # K rows to the driver (bounded by model geometry): the collect IS
-        # the round's one materializing action — the former localCheckpoint
-        # cost the same job, but left a checkpoint-backed table whose pack +
-        # broadcast submitted ANOTHER job per consumer; literal centroids
-        # make the next assign a pure projection (bounded_rows rationale)
-        centroids = bounded_rows(_update(assigned), K, "kmeans_c1")
-        assigned = _assign(v, centroids)
-    return assigned.select(
+    return lloyd(_embeddings(spark, sf_dir), K, ITERS).select(
         "vec_id", F.col("cid").cast("bigint").alias("cluster"),
         F.round("dist", 6).alias("dist"))
 
@@ -254,21 +202,10 @@ def trained_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/artifacts.py; two-session proof in test_artifacts.py).
     Consumers: the trained-IVF search below and the SemDeDup tier
     (operators/semantic.py)."""
-    from alertas_spark.operators.simsearch import _norm2
-
     def train() -> DataFrame:
-        v = valid_embeddings(load_table(spark, sf_dir, "embeddings")).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-        centroids = v.filter(F.col("vec_id") < K).select(
-            F.col("vec_id").alias("cid"), F.col("emb").alias("cvec"))
-        assigned = _assign(v, centroids)
-        for _ in range(ITERS - 1):
-            centroids = bounded_rows(_update(assigned), K, "kmeans_c1")
-            assigned = _assign(v, centroids)
-        # lazy: persistent_artifact owns materialization (the per-iteration
-        # literal centroid arrays above already truncate the deep lineage)
-        return assigned.select("vec_id", "emb", "cid",
-                               F.sqrt(_norm2(F.col("emb"))).alias("nrm"))
+        # lazy: persistent_artifact owns materialization
+        return lloyd(_embeddings(spark, sf_dir), K, ITERS).select(
+            "vec_id", "emb", "cid", F.sqrt(norm2(F.col("emb"))).alias("nrm"))
 
     return persistent_artifact(spark, sf_dir, "kmeans_trained_assignment",
                                code_version="1", table="embeddings",
@@ -282,7 +219,7 @@ def simsearch_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from `kmeans_assign` + `simsearch_topk_ivf` composed, oracle-checked end to end.
     (late: the ANN capability rows in the driver window are ivf_assigned +
     recall_eval; this pins the trained composition locally.)"""
-    from alertas_spark.operators.simsearch import N_QUERIES, TOP_K, _dot
+    from alertas_spark.operators.simsearch import N_QUERIES, TOP_K
 
     n = trained_assignment(spark, sf_dir)
     q = n.filter(F.col("vec_id") < N_QUERIES).select(
@@ -292,7 +229,7 @@ def simsearch_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         n.join(F.broadcast(q),
                (F.col("query_id") != F.col("vec_id"))
                & (F.col("qcid") == F.col("cid")))
-        .withColumn("cos", _dot(F.col("qemb"), F.col("emb"))
+        .withColumn("cos", dot(F.col("qemb"), F.col("emb"))
                     / (F.col("qnrm") * F.col("nrm")))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))

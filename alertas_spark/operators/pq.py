@@ -25,20 +25,22 @@ distances over the PQ top-100 is the standard production refinement.
 
 Scale shape:
 
-* **encode** — the codebook build is one tiny global agg (KSUB rows → 1 packed
-  row, broadcast); encoding itself is a pure scan-side projection (argmin over
-  the broadcast codebook with array HOFs, fold order fixed left-to-right so the
-  codes are bit-deterministic across engines and partitionings) — ZERO shuffles,
-  embarrassingly parallel at 100 TB.
-* **ADC top-k** — the per-query LUTs (N_QUERIES × 4×16 doubles) and the packed
+* **encode** — the seed codebook is one bounded driver pull of the KSUB seed
+  rows, baked into a constant-folded literal; encoding itself is a pure
+  scan-side projection (argmin over the literal codebook with array HOFs, fold
+  order fixed left-to-right so the codes are bit-deterministic across engines
+  and partitionings) — ZERO shuffles, no joins, embarrassingly parallel at
+  100 TB.
+* **ADC top-k** — the per-query LUTs (N_QUERIES × 4×16 doubles) and the seed
   codebook are tiny driver artifacts broadcast to every task; codes + approximate
   distances are vectorized numpy inside ONE ``mapInPandas`` scan that emits only
   its partition-local top-k per query; the single shuffle is the exact final rank
   over ≤ k · n_partitions rows per query (two-phase top-k, operators/topk.py) —
   never a full-corpus sort in N_QUERIES tasks.
 
-All distances are sequential left-to-right double folds (the ``simsearch._dot``
-contract), bit-equal to the DuckDB oracle's ``list_reduce``.
+All distances are sequential left-to-right double folds with ties to the
+lowest id (the operators/vectors.py contract), bit-equal to the DuckDB
+oracle's ``list_reduce``.
 
 No reference counterpart (the reference has no vector ops); extension operator
 per the training-data-pipeline brief.
@@ -49,12 +51,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from alertas_spark.operators.artifacts import (persistent_artifact,
+from alertas_spark.operators.artifacts import (bounded_rows,
+                                               persistent_artifact,
                                                persistent_artifact_rows)
-from alertas_spark.operators.kmeans import _assign, _update
+from alertas_spark.operators.kmeans import _assign, _update, lloyd
 from alertas_spark.operators.memo import session_artifact
 from alertas_spark.operators.embgate import (EMB_VALID_SQL, np_valid_mask,
                                              valid_embeddings, valid_nrm)
+from alertas_spark.operators.vectors import (argmin, dot, lit_centroid_array,
+                                             lit_codebook_by_m, nearest,
+                                             norm2, seq_sqdist, sqdist)
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -64,14 +70,6 @@ DIM = M * SUBDIM  # full embedding width (64) — single definition for the modu
 KSUB = 16    # codewords per subspace
 N_QUERIES = 10  # vec_id < 10 are the query vectors (simsearch.py convention)
 TOP_K = 5
-
-#: per-(m, c) squared-L2 between a sub-vector of ``emb`` and codeword ``cb[m][c]``,
-#: as a fixed-order fold (element_at is 1-based; `m`/`c` come from sequence()).
-_SUBDIST = (
-    "aggregate(zip_with(slice(emb, ({m} - 1) * {sd} + 1, {sd}), "
-    "element_at(element_at(cb, {m}), {c}), (x, y) -> (x - y) * (x - y)), "
-    "cast(0.0 as double), (acc, v) -> acc + v)"
-)
 
 #: L2-normalized embeddings (fold order matches Spark's `_normalized`)
 _DUCK_V = f"""v0 AS (SELECT vec_id, embedding::DOUBLE[] AS e0 FROM embeddings
@@ -109,17 +107,6 @@ _DUCK_CODES = f"""
     codes AS (SELECT vec_id, m, c, d FROM best WHERE rn = 1)"""
 
 
-def _codebook(v: DataFrame) -> DataFrame:
-    """1-row DataFrame: ``cb[m][c][d]`` nested array (1-based via element_at) —
-    sub-vector ``m`` of seed vector ``vec_id == c - 1``."""
-    seeds = v.filter(F.col("vec_id") < KSUB)
-    packed = seeds.groupBy().agg(
-        F.array_sort(F.collect_list(F.struct("vec_id", "emb"))).alias("seeds"))
-    return packed.select(F.expr(
-        f"transform(sequence(1, {M}), m -> transform(seeds, "
-        f"s -> slice(s.emb, (m - 1) * {SUBDIM} + 1, {SUBDIM})))").alias("cb"))
-
-
 def _normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings L2-normalized (fixed-fold norm), so PQ's L2² ADC distance is
     monotone in cosine (‖a−b‖² = 2−2·cos for unit vectors) and the compressed
@@ -127,9 +114,7 @@ def _normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e0"))
-        .withColumn("nrm", F.sqrt(F.expr(
-            "aggregate(transform(e0, x -> x * x), cast(0.0 as double), "
-            "(acc, v) -> acc + v)")))
+        .withColumn("nrm", F.sqrt(norm2(F.col("e0"))))
         .filter(valid_nrm(F.col("nrm")))  # embgate, free off the existing fold
         # nullif guard: the filter already excludes nrm = 0, but Catalyst's
         # InferFiltersFromGenerate can synthesize a `size(emb) > 0` predicate
@@ -143,19 +128,33 @@ def _normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _seed_rows(spark: SparkSession, sf_dir: str) -> dict:
+    """``{vec_id: normalized emb}`` for ``vec_id < max(KSUB, N_QUERIES)`` —
+    the seed codewords and the query vectors in ONE bounded pull (the
+    ``vec_id <`` filter rides into the parquet scan).  The normalized
+    embeddings come out of the SAME plan every other PQ path reads, so the
+    doubles are bit-identical to the scan-side values."""
+    n = max(KSUB, N_QUERIES)
+    rows = bounded_rows(_normalized(spark, sf_dir)
+                        .filter(F.col("vec_id") < n), n, "pq_seed_rows")
+    return {r["vec_id"]: r["emb"] for r in rows}
+
+
 def _encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, codes) where ``codes[m]`` = struct(d, c): the argmin codeword id
-    (ties to the lowest id) and its exact sub-distance.  Scan-side only."""
-    v = _normalized(spark, sf_dir)
-    # array_min over struct(d, c) = lexicographic min = min d, ties to lowest c
-    argmin = ", ".join(
-        f"array_min(transform(sequence(1, {KSUB}), c -> "
-        f"struct({_SUBDIST.format(m=m, sd=SUBDIM, c='c')} AS d, c AS c)))"
-        for m in range(1, M + 1))
-    return (
-        v.crossJoin(F.broadcast(_codebook(v)))
-        .select("vec_id", F.expr(f"array({argmin})").alias("codes"))
-    )
+    """(vec_id, codes) where ``codes[m]`` = struct(dist, c): the argmin seed
+    codeword id (ties to the lowest id) and its exact sub-distance.  The
+    seed codebook enters as a constant-folded literal, so encoding is a
+    scan-side projection: no exchange, no join."""
+    # codeword c of subspace m is sub-vector m of the seed vector vec_id == c
+    cb = F.expr(lit_codebook_by_m(
+        [{"m": m, "c": c, "cvec": emb[(m - 1) * SUBDIM:m * SUBDIM]}
+         for c, emb in _seed_rows(spark, sf_dir).items() if c < KSUB
+         for m in range(1, M + 1)], M))
+    codes = [argmin(F.slice("emb", (m - 1) * SUBDIM + 1, SUBDIM),
+                    F.element_at(cb, m), "c")
+             for m in range(1, M + 1)]
+    return _normalized(spark, sf_dir).select("vec_id",
+                                             F.array(*codes).alias("codes"))
 
 
 @declare(
@@ -178,12 +177,11 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     total quantization error (sum of the 4 exact sub-distances, the ADC
     self-distance).  Zero shuffles — see module docstring."""
     enc = _encoded(spark, sf_dir)
-    # internal code ids are 1-based sequence indexes; the published code is the
-    # seed vector id (0-based), matching the codebook definition
-    cols = [F.expr(f"element_at(codes, {m}).c - 1").cast("int").alias(f"code_{m}")
+    # the published code is the seed vector id, the codebook's ``c``
+    cols = [F.expr(f"element_at(codes, {m}).c").cast("int").alias(f"code_{m}")
             for m in range(1, M + 1)]
     qerr = F.round(F.expr(
-        "aggregate(codes, cast(0.0 as double), (acc, s) -> acc + s.d)"), 6)
+        "aggregate(codes, cast(0.0 as double), (acc, s) -> acc + s.dist)"), 6)
     return enc.select("vec_id", *cols, qerr.alias("qerr"))
 
 
@@ -215,33 +213,16 @@ _DUCK_ADC_RANKED = f"""
     )"""
 
 
-def _seq_subdist(a, b):
-    """Sequential left-fold of Σ(aᵢ−bᵢ)² over the LAST axis — operation-for-
-    operation the `_SUBDIST` / `_DUCK_SUBDIST` fold (single IEEE add per step,
-    no pairwise regrouping, no FMA), so results are bit-equal to both engines."""
-    diff = a - b
-    sq = diff * diff
-    d = sq[..., 0].copy()
-    for i in range(1, sq.shape[-1]):
-        d += sq[..., i]
-    return d
-
-
 def _adc_artifacts(spark: SparkSession, sf_dir: str):
-    """Driver-side bounded pull of the tiny PQ scoring artifacts (the S15
-    scalar-pull pattern, size-bounded by module constants): ONE job collecting
-    the ≤ max(KSUB, N_QUERIES) seed/query rows — the `vec_id <` filter rides
-    into the parquet scan — from which the packed codebook (seed sub-vector
-    slices, pure selection) and the per-query ADC LUTs (`_seq_subdist`, the
-    bit-exact fold) are assembled in numpy.  The normalized embeddings come out
-    of the SAME plan every other PQ path reads, so all doubles are bit-identical
-    to the declarative computation they replace."""
+    """The tiny PQ scoring artifacts in numpy, assembled from the ONE bounded
+    seed/query pull (:func:`_seed_rows`): the seed codebook (sub-vector
+    slices, pure selection) and the per-query ADC LUTs (``seq_sqdist``, the
+    bit-exact fold)."""
     import numpy as np
 
-    v = _normalized(spark, sf_dir)
-    rows = v.filter(F.col("vec_id") < max(KSUB, N_QUERIES)).collect()
-    by_id = {r["vec_id"]: np.asarray(r["emb"], dtype=np.float64) for r in rows}
-    # cb[m][c] = sub-vector m of seed vector vec_id == c (the _codebook contract)
+    by_id = {i: np.asarray(e, dtype=np.float64)
+             for i, e in _seed_rows(spark, sf_dir).items()}
+    # cb[m][c] = sub-vector m of seed vector vec_id == c (as in _encoded)
     cb = np.stack([
         np.stack([by_id[c][m * SUBDIM:(m + 1) * SUBDIM] for c in range(KSUB)])
         for m in range(M)])                                          # (M,KSUB,SUBDIM)
@@ -249,7 +230,7 @@ def _adc_artifacts(spark: SparkSession, sf_dir: str):
     qsub = np.stack([
         np.stack([by_id[int(q)][m * SUBDIM:(m + 1) * SUBDIM] for m in range(M)])
         for q in qids])                                              # (nq,M,SUBDIM)
-    lut = _seq_subdist(qsub[:, :, None, :], cb[None, :, :, :])       # (nq,M,KSUB)
+    lut = seq_sqdist(qsub[:, :, None, :], cb[None, :, :, :])         # (nq,M,KSUB)
     return qids, lut, cb
 
 
@@ -267,17 +248,18 @@ def _adc_topk(spark: SparkSession, sf_dir: str, depth: int) -> DataFrame:
     full sort anywhere.
 
     Bit-equality is preserved operation-for-operation: sub-distances accumulate
-    sequentially over dims (same left fold as `_SUBDIST`/`_DUCK_SUBDIST`, single
-    IEEE add per step, no FMA), argmin ties resolve to the lowest codeword id
-    (first-occurrence argmin), and adist sums the 4 LUT lookups in subspace
-    order — so codes, distances, and therefore ranks match the oracle exactly."""
+    sequentially over dims (same left fold as `vectors.sqdist`/`_DUCK_SUBDIST`,
+    single IEEE add per step, no FMA), argmin ties resolve to the lowest
+    codeword id (first-occurrence argmin), and adist sums the 4 LUT lookups
+    in subspace order — so codes, distances, and therefore ranks match the
+    oracle exactly."""
     import numpy as np
     import pandas as pd
 
     bc = spark.sparkContext.broadcast(_adc_artifacts(spark, sf_dir))
     # raw vectors in, normalization INSIDE the numpy scan: the interpreted
-    # per-row `aggregate(transform(...))` norm fold was the dominant 10×-probe
-    # cost once scoring went vectorized — `_seq_subdist(mat, 0.0)` is the same
+    # per-row `vectors.norm2` fold was the dominant 10×-probe cost once
+    # scoring went vectorized — `seq_sqdist(mat, 0.0)` is the same
     # fold op-for-op (x−0.0 ≡ x bit-wise), sqrt and the per-element divide are
     # single-rounded in both engines, so normalized values stay bit-equal.
     v = (load_table(spark, sf_dir, "embeddings")
@@ -297,11 +279,11 @@ def _adc_topk(spark: SparkSession, sf_dir: str, depth: int) -> DataFrame:
                 raw, ids = raw[keep], ids[keep]
                 if not len(ids):
                     continue
-            mat = raw / np.sqrt(_seq_subdist(raw, 0.0))[:, None]
+            mat = raw / np.sqrt(seq_sqdist(raw, 0.0))[:, None]
             acc = None  # (nq, n) ADC distances, accumulated in subspace order
             for m in range(M):
                 sub = mat[:, m * SUBDIM:(m + 1) * SUBDIM]
-                d = _seq_subdist(sub[:, None, :], cb[m][None, :, :])
+                d = seq_sqdist(sub[:, None, :], cb[m][None, :, :])
                 codes_m = d.argmin(axis=1)          # ties → lowest codeword id
                 lm = lut[:, m, :][:, codes_m]       # (nq, n) LUT gather
                 acc = lm if acc is None else acc + lm
@@ -421,16 +403,12 @@ def _rerank_from_adc(spark: SparkSession, sf_dir: str, adc: DataFrame) -> DataFr
             .select("vec_id", F.col("embedding").cast("array<double>").alias("e0")))
     q = (_normalized(spark, sf_dir).filter(F.col("vec_id") < N_QUERIES)
          .select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")))
-    dot = ("aggregate(zip_with(qemb, emb, (x, y) -> x * y), "
-           "cast(0.0 as double), (acc, v) -> acc + v)")
     rr = (
         vraw.join(F.broadcast(short), "vec_id")
-        .withColumn("nrm", F.sqrt(F.expr(
-            "aggregate(transform(e0, x -> x * x), cast(0.0 as double), "
-            "(acc, v) -> acc + v)")))
+        .withColumn("nrm", F.sqrt(norm2(F.col("e0"))))
         .withColumn("emb", F.expr("transform(e0, x -> x / nrm)"))
         .join(F.broadcast(q), "query_id")
-        .withColumn("cos", F.expr(dot))
+        .withColumn("cos", dot(F.col("qemb"), F.col("emb")))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
@@ -521,6 +499,53 @@ def _sub_mean(a1: DataFrame) -> DataFrame:
                   for i in range(SUBDIM)]).alias("cvec"))
 
 
+def _split_subspaces(df: DataFrame, vec: str, *keep: str) -> DataFrame:
+    """``(*keep, m, sub)``: one row per subspace ``m`` in ``1..M`` carrying
+    the SUBDIM-wide slice ``m`` of the vector column ``vec``."""
+    return (df.select(*keep, F.posexplode(F.expr(
+        f"transform(sequence(1, {M}), m -> slice({vec}, (m - 1) * {SUBDIM}"
+        f" + 1, {SUBDIM}))")).alias("m0", "sub"))
+        .select(*keep, (F.col("m0") + 1).alias("m"), "sub"))
+
+
+def _assign_sub(subs: DataFrame, cw: list) -> DataFrame:
+    """``subs`` plus ``c``/``dist``: per (vec_id, m), the codeword minimizing
+    the sequential-fold sub-L2², ties to the lowest id.  The driver-held
+    codebook ROWS bake into a constant-folded literal indexed by ``m`` and
+    the argmin runs inside the scan projection (``vectors.nearest``) — zero
+    exchange, no broadcast job, no join-by-m (the former crossJoin-by-m +
+    struct-min agg shuffled every sub-vector once per pass).  ``sub`` stays
+    on the row for the Lloyd mean, which the former shape re-joined against
+    a SECOND evaluation of the subs subtree (Catalyst does not dedupe
+    identical subtrees)."""
+    return nearest(subs, "sub",
+                   F.element_at(F.expr(lit_codebook_by_m(cw, M)), F.col("m")),
+                   "c")
+
+
+def _sub_codebook(subs: DataFrame) -> DataFrame:
+    """The trained ``(m, c, cvec)`` codebook over the sub-vector rows
+    ``subs`` ``(vec_id, m, sub)`` — the one PQ codebook trainer (flat PQ and
+    the IVFADC residuals).  Seed: codeword ``c`` of subspace ``m`` is the
+    sub-vector of ``vec_id == c < KSUB``.  One deterministic Lloyd update:
+    assign every sub-vector to its nearest seed, replace each codeword by the
+    decimal-exact mean of its members (``_sub_mean``, ONE exchange); empty
+    cells keep their seed.  Seeds and means are bounded driver pulls
+    (≤ M·KSUB rows), completed on the driver; the artifact tier persists and
+    collects the returned local relation."""
+    seeds = bounded_rows(
+        subs.filter(F.col("vec_id") < KSUB).select(
+            "m", F.col("vec_id").cast("int").alias("c"),
+            F.col("sub").alias("cvec")),
+        M * KSUB, "pq_codebook_c0")
+    means = {(r["m"], r["c"]): r["cvec"]
+             for r in bounded_rows(_sub_mean(_assign_sub(subs, seeds)),
+                                   M * KSUB, "pq_codebook_c1")}
+    return subs.sparkSession.createDataFrame(
+        [(r["m"], r["c"], means.get((r["m"], r["c"]), r["cvec"]))
+         for r in seeds], "m int, c int, cvec array<double>")
+
+
 @declare(
     "pq_encode_trained",
     oracle=f"""
@@ -543,62 +568,13 @@ def pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowest id, DECIMAL(29,6) means) applied per subspace, so training is
     idempotent across partitionings and engines.
 
-    Scale shape per subspace pass: one shuffle on (vec_id, m) for the argmin,
-    one (m, c, dim) aggregation with map-side combine for the means (64×16×16
-    cells — tiny), broadcast of the trained codebook back.  The qerr sum
-    quantizes each sub-distance to 1e-9-unit bigints so the 4-term sum is
-    order-independent."""
-    v = _normalized(spark, sf_dir)
-    subs = v.select(
-        "vec_id",
-        F.posexplode(F.expr(
-            f"transform(sequence(1, {M}), m -> slice(emb, (m - 1) * {SUBDIM} + 1, "
-            f"{SUBDIM}))")).alias("m0", "sub"),
-    ).select("vec_id", (F.col("m0") + 1).alias("m"), "sub")
-    cw0 = (subs.filter(F.col("vec_id") < KSUB)
-           .select("m", F.col("vec_id").cast("int").alias("c"),
-                   F.col("sub").alias("cvec")))
-    def assign(cw) -> DataFrame:
-        # ZERO-exchange sub-assignment (r18, kmeans._assign's exact shape per
-        # subspace): the KSUB codewords of each subspace pack into ONE array
-        # row, the 4-row packed codebook broadcasts, and the argmin runs
-        # inside the scan projection via array_min over (d, c) structs —
-        # field-by-field struct comparison IS the (lowest d, ties to lowest
-        # c) contract.  The former crossJoin-by-m + (vec_id, m) struct-min
-        # agg shuffled every sub-vector once per assign pass; now ``sub``
-        # stays on the row for free (the Lloyd mean needs it — previously a
-        # join-back against a second evaluation of the subs subtree).
-        # Driver-held trained-codebook ROWS bake into a constant-folded
-        # literal instead — no pack, no broadcast job, no join-by-m.
-        # c coalesced non-nullable — see _assign_sub (kills the inferred-
-        # isnotnull re-evaluation of the argmin chain under the mean1 join)
-        c = F.coalesce(F.col("best.c"), F.lit(-1)).alias("c")
-        if isinstance(cw, list):
-            return (subs.withColumn(
-                "best",
-                F.expr(_sub_best(f"element_at({_lit_codebook_by_m(cw)}, m)")))
-                .select("vec_id", "m", c, F.col("best.d").alias("d"), "sub"))
-        return (subs.join(F.broadcast(_packed_codebook(cw)), "m")
-                .withColumn("best", F.expr(_SUB_BEST))
-                .select("vec_id", "m", c, F.col("best.d").alias("d"), "sub"))
-
-    def train_codebook() -> DataFrame:
-        a1 = assign(cw0)
-        # ONE exchange (r18, kmeans._update's exact shape per subspace): the
-        # per-dimension decimal sums ride SUBDIM agg columns in a single
-        # groupBy(m, c) — the former posexplode + groupBy(m, c, dim) +
-        # groupBy(m, c) paid two exchanges and a SUBDIM× row explosion for
-        # bit-identical numbers (decimal sums are order-independent).
-        mean1 = _sub_mean(a1)
-        return (
-            # one join: seed-aliased cw0 left-joins the means (keys unique) —
-            # the former drop+join+join evaluated the cw0 subtree twice
-            cw0.select("m", "c", F.col("cvec").alias("seed"))
-            .join(mean1, ["m", "c"], "left")
-            .select("m", "c", F.coalesce("cvec", "seed").alias("cvec"))
-            # 64 tiny rows; lazy — persistent_artifact owns materialization
-        )
-
+    Scale shape: the seed and the trained codebook are bounded driver pulls
+    (≤ M·KSUB rows) baked into constant-folded literals, so both assignment
+    passes are scan-side projections; the means are one (m, c) aggregation
+    with map-side combine, and the codes one conditional aggregation on
+    ``vec_id``.  The qerr sum quantizes each sub-distance to 1e-9-unit
+    bigints so the 4-term sum is order-independent."""
+    subs = _split_subspaces(_normalized(spark, sf_dir), "emb", "vec_id")
     # trained-artifact tiers: the Lloyd pass runs once per session per dataset
     # (operators/memo.py), and when an artifact store is configured
     # (spark.alertas.artifacts.dir / ALERTAS_ARTIFACTS_DIR) the 64-row trained
@@ -606,16 +582,16 @@ def pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # entirely (operators/artifacts.py); the final re-assign runs per call
     cw1 = persistent_artifact_rows(spark, sf_dir, "pq_trained_codebook",
                                    code_version="1", table="embeddings",
-                                   build=train_codebook,
+                                   build=lambda: _sub_codebook(subs),
                                    max_rows=M * KSUB)
-    a2 = assign(cw1)
+    a2 = _assign_sub(subs, cw1)
     # codes + qerr in ONE conditional aggregation (single shuffle on vec_id) —
     # a pivot + join-back here would cost an extra exchange and a merge join
     code_cols = [F.max(F.when(F.col("m") == m, F.col("c"))).cast("int")
                  .alias(f"code_{m}") for m in range(1, M + 1)]
     return a2.groupBy("vec_id").agg(
         *code_cols,
-        F.round(F.sum(F.round(F.col("d") * 1e9).cast("bigint")) / 1e9, 6)
+        F.round(F.sum(F.round(F.col("dist") * 1e9).cast("bigint")) / 1e9, 6)
         .alias("qerr"))
 
 
@@ -638,15 +614,16 @@ def pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Structure (every trained piece rides the artifact store):
 #
-# * coarse quantizer — 2 deterministic Lloyd iterations (kmeans.py's exact
-#   ``_assign``/``_update`` machinery) over the L2-NORMALIZED embeddings, so
+# * coarse quantizer — deterministic Lloyd (kmeans.py's one loop,
+#   ``lloyd`` + ``_update``) over the L2-NORMALIZED embeddings, so
 #   ADC's L2² ranking stays monotone in cosine like every other PQ tier;
 #   the K-row centroid table is the persisted artifact, assignment is a
 #   zero-shuffle argmin re-projection at read time (the FAISS add-time shape).
 # * residual codebook — ONE codebook shared across cells (the published
 #   IVFADC choice): seed = the first KSUB residuals, one deterministic Lloyd
-#   update per subspace (``pq_encode_trained``'s contract: decimal(29,6)
-#   means, ties to the lowest id, empty cells keep their seed).
+#   update per subspace (``_sub_codebook``, the trainer ``pq_encode_trained``
+#   also uses: decimal(29,6) means, ties to the lowest id, empty cells keep
+#   their seed).
 # * search — per query, rank the coarse cells by centroid distance and probe
 #   the nearest NPROBE; build the per-(query, cell) 4×16 LUT of exact
 #   sub-distances between the query's CELL residual and the codewords; a
@@ -654,11 +631,11 @@ def pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   1e-9-unit bigints before the sum so the 4-term total is order- and
 #   engine-independent.
 #
-# Scale shape: centroids and codebook are tiny broadcast artifacts; encoding
-# is a scan projection; the probe list bounds the candidate join (the IVF
-# prune — candidates shuffle once on cell id, never all-pairs); the final
-# rank is the two-phase exact top-k.  Nothing driver-side grows with the
-# corpus.
+# Scale shape: centroids and codebook are tiny driver-held rows baked into
+# constant-folded literals; encoding is a scan projection; the probe list
+# bounds the candidate join (the IVF prune — candidates shuffle once on cell
+# id, never all-pairs); the final rank is the two-phase exact top-k.
+# Nothing driver-side grows with the corpus.
 #
 # No reference counterpart (the reference has no vector ops); extension
 # operator per the training-data-pipeline brief.
@@ -789,10 +766,7 @@ def _coarse_centroids(spark: SparkSession, sf_dir: str) -> list:
     Driver-held: every consumer bakes them into a constant-folded literal
     (no broadcast jobs, no joins — artifacts.persistent_artifact_rows)."""
     def train() -> DataFrame:
-        v = _normalized(spark, sf_dir)
-        c0 = v.filter(F.col("vec_id") < KC).select(
-            F.col("vec_id").alias("cid"), F.col("emb").alias("cvec"))
-        return _update(_assign(v, c0))  # lazy; ≤KC rows
+        return _update(lloyd(_normalized(spark, sf_dir), KC, 1))  # ≤KC rows
 
     return persistent_artifact_rows(spark, sf_dir, "ivfpq_coarse_centroids",
                                     code_version="1", table="embeddings",
@@ -809,109 +783,18 @@ def _residual_subs(spark: SparkSession, sf_dir: str, c1: list) -> DataFrame:
     res = a2.select(
         "vec_id", "cid",
         F.zip_with("emb", "cvec", lambda x, c: x - c).alias("r"))
-    return (res.select(
-        "vec_id", "cid",
-        F.posexplode(F.expr(
-            f"transform(sequence(1, {M}), m -> slice(r, (m - 1) * {SUBDIM}"
-            f" + 1, {SUBDIM}))")).alias("m0", "sub"))
-        .select("vec_id", "cid", (F.col("m0") + 1).alias("m"), "sub"))
-
-
-#: scan-side sub-argmin over the packed per-subspace codeword array (r18):
-#: array_min over (d, c) structs = the oracle's ORDER BY d, c — struct
-#: comparison is field-by-field, d is the same sequential fold both ways.
-#: ``cs_expr`` is the packed broadcast column or a constant-folded literal.
-def _sub_best(cs_expr: str) -> str:
-    return (f"array_min(transform({cs_expr}, cc -> named_struct("
-            "'d', aggregate(zip_with(sub, cc.cvec, "
-            "(x, y) -> (x - y) * (x - y)), "
-            "cast(0.0 as double), (acc, v) -> acc + v), "
-            "'c', cc.c)))")
-
-
-_SUB_BEST = _sub_best("cs")
-
-
-def _packed_codebook(cw: DataFrame) -> DataFrame:
-    """(m, array<(c, cvec)>): one row per subspace — the broadcast shape that
-    lets the argmin run inside the scan projection (``_SUB_BEST``) with zero
-    exchange; min-over-set is order-independent, so the unordered
-    collect_list is deterministic in the result."""
-    return cw.groupBy("m").agg(
-        F.collect_list(F.struct("c", "cvec")).alias("cs"))
-
-
-def _lit_codebook_by_m(rows) -> str:
-    """A trained (m, c, cvec) codebook as ONE literal
-    ``array<array<struct<c, cvec>>>`` SQL expression indexed by subspace
-    (``element_at(..., m)``), constant-folded by Catalyst into a single
-    Literal.  Consumers evaluate the sub-argmin / LUT against a CONSTANT —
-    no pack aggregation, no BroadcastExchange job, no join-by-m (the
-    trainer chains are job-count-bound; artifacts.bounded_rows)."""
-    from alertas_spark.operators.kmeans import dlit
-
-    by_m: dict = {}
-    for r in sorted(rows, key=lambda r: (r["m"], r["c"])):
-        by_m.setdefault(r["m"], []).append(r)
-    assert sorted(by_m) == list(range(1, M + 1))
-    per_m = []
-    for m in range(1, M + 1):
-        items = ", ".join(
-            f"named_struct('c', {int(r['c'])}, "
-            f"'cvec', array({', '.join(dlit(x) for x in r['cvec'])}))"
-            for r in by_m[m])
-        per_m.append(f"array({items})")
-    return f"array({', '.join(per_m)})"
-
-
-def _assign_sub(subs: DataFrame, cw) -> DataFrame:
-    """Per (vec_id, m): the codeword minimizing the sequential-fold sub-L2²,
-    ties to the lowest id — evaluated scan-side against the packed codebook
-    (zero-exchange; the former crossJoin-by-m + struct-min agg shuffled every
-    residual sub-vector once per pass).  Driver-held codebook ROWS (the
-    trained artifact) become a constant-folded literal indexed by ``m`` —
-    no broadcast job, no join."""
-    # c coalesced non-nullable (sentinel never occurs — the argmin over a
-    # non-empty codeword set is never null): joins on c/cid then infer NO
-    # isnotnull constraint, which would otherwise re-evaluate the whole
-    # argmin chain per row as a pushed filter (kmeans._assign rationale)
-    c = F.coalesce(F.col("best.c"), F.lit(-1)).alias("c")
-    if isinstance(cw, list):
-        return (subs.withColumn(
-            "best",
-            F.expr(_sub_best(f"element_at({_lit_codebook_by_m(cw)}, m)")))
-            .select("vec_id", "cid", "m", c))
-    return (subs.join(F.broadcast(_packed_codebook(cw)), "m")
-            .withColumn("best", F.expr(_SUB_BEST))
-            .select("vec_id", "cid", "m", c))
+    return _split_subspaces(res, "r", "vec_id", "cid")
 
 
 def _residual_codebook(spark: SparkSession, sf_dir: str, c1: list) -> list:
     """The trained (m, c, cvec) residual codebook ROWS (≤M·KSUB, model
-    geometry) — one Lloyd update over the pooled residual sub-vectors
-    (pq_encode_trained's exact contract); driver-held for literal baking."""
-    def train() -> DataFrame:
-        subs = _residual_subs(spark, sf_dir, c1)
-        cw0 = (subs.filter(F.col("vec_id") < KSUB)
-               .select("m", F.col("vec_id").cast("int").alias("c"),
-                       F.col("sub").alias("cvec")))
-        # scan-side argmin against the packed codebook (zero exchange) —
-        # ``sub`` stays on the row for the Lloyd mean, where the former
-        # shape paid a join-back against a SECOND evaluation of the subs
-        # subtree (Catalyst does not dedupe identical subtrees)
-        a1 = (subs.join(F.broadcast(_packed_codebook(cw0)), "m")
-              .withColumn("best", F.expr(_SUB_BEST))
-              .select("vec_id", "m", F.col("best.c").alias("c"), "sub"))
-        # single-exchange per-dimension means + one seed-coalesce join — see
-        # pq_encode_trained.train_codebook (identical rewrite, r18)
-        mean1 = _sub_mean(a1)
-        return (cw0.select("m", "c", F.col("cvec").alias("seed"))
-                .join(mean1, ["m", "c"], "left")
-                .select("m", "c", F.coalesce("cvec", "seed").alias("cvec")))
-
-    return persistent_artifact_rows(spark, sf_dir, "ivfpq_residual_codebook",
-                                    code_version="1", table="embeddings",
-                                    build=train, max_rows=M * KSUB)
+    geometry) — ``_sub_codebook`` over the pooled residual sub-vectors;
+    driver-held for literal baking."""
+    return persistent_artifact_rows(
+        spark, sf_dir, "ivfpq_residual_codebook", code_version="1",
+        table="embeddings",
+        build=lambda: _sub_codebook(_residual_subs(spark, sf_dir, c1)),
+        max_rows=M * KSUB)
 
 
 def _probed_cells(spark: SparkSession, sf_dir: str, c1: list) -> DataFrame:
@@ -921,18 +804,14 @@ def _probed_cells(spark: SparkSession, sf_dir: str, c1: list) -> DataFrame:
     as an ``inline`` over the constant-folded literal array (same (query,
     centroid) rows the former crossJoin(broadcast) produced, minus its
     broadcast-build job)."""
-    from alertas_spark.operators.kmeans import lit_centroid_array
-
     q = (_normalized(spark, sf_dir)
          .filter(F.col("vec_id") < N_QUERIES)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("emb").alias("qemb")))
-    qdist = ("aggregate(zip_with(qemb, cvec, (x, y) -> (x - y) * (x - y)), "
-             "cast(0.0 as double), (acc, v) -> acc + v)")
     wq = Window.partitionBy("query_id").orderBy("qd", "cid")
     return (q.select("query_id", "qemb",
                      F.expr(f"inline({lit_centroid_array(c1)})"))
-            .withColumn("qd", F.expr(qdist))
+            .withColumn("qd", sqdist(F.col("qemb"), F.col("cvec")))
             .withColumn("rn", F.row_number().over(wq))
             .filter(F.col("rn") <= NPROBE)
             .select("query_id", "cid",
@@ -948,17 +827,16 @@ def _ivfpq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     cw1 = _residual_codebook(spark, sf_dir, c1)
     codes = _assign_sub(_residual_subs(spark, sf_dir, c1), cw1)
     probes = _probed_cells(spark, sf_dir, c1)
-    lutsub = (f"aggregate(zip_with(slice(qr, (m - 1) * {SUBDIM} + 1, "
-              f"{SUBDIM}), cvec, (x, y) -> (x - y) * (x - y)), "
-              f"cast(0.0 as double), (acc, v) -> acc + v)")
     # the codewords enter the LUT as an inline over the literal codebook —
     # same (probe, codeword) rows as the former crossJoin(broadcast(cw1)),
     # minus its broadcast-build job
-    cwlit = ("inline(flatten(transform(" + _lit_codebook_by_m(cw1)
+    cwlit = ("inline(flatten(transform(" + lit_codebook_by_m(cw1, M)
              + ", (a, i) -> transform(a, s -> "
              "named_struct('m', i + 1, 'lc', s.c, 'cvec', s.cvec)))))")
     lut = (probes.select("query_id", "cid", "qr", F.expr(cwlit))
-           .withColumn("sd", F.expr(lutsub))
+           .withColumn("sd", sqdist(
+               F.slice("qr", (F.col("m") - 1) * SUBDIM + 1, SUBDIM),
+               F.col("cvec")))
            .select("query_id", "cid", "m", "lc", "sd"))
     return (codes
             .join(F.broadcast(lut), ["cid", "m"])
@@ -1295,9 +1173,7 @@ def _candidate_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = (load_table(spark, sf_dir, "embeddings")
          .select("vec_id",
                  F.col("embedding").cast("array<double>").alias("emb"))
-         .withColumn("nrm", F.sqrt(F.expr(
-             "aggregate(transform(emb, x -> x * x), cast(0.0 as double), "
-             "(acc, v) -> acc + v)")))
+         .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
          .filter(valid_nrm(F.col("nrm")))
          .selectExpr("vec_id", *[
              f"({d}) AS d{p}" for p, d

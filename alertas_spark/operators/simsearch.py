@@ -8,31 +8,22 @@
   partition id, so Spark shuffles each query only to its bucket — the scale path
   (probe-1 IVF; multi-probe = OR more labels in the join key).
 
-No UDFs: dot products are ``zip_with`` + ``aggregate`` higher-order functions, JVM-side.
+No UDFs: dot products and norms are the sequential higher-order-function folds of
+operators/vectors.py, JVM-side.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from alertas_spark.operators.embgate import EMB_VALID_SQL, valid_nrm
+from alertas_spark.operators.vectors import dot, norm2
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
 TOP_K = 5
 N_QUERIES = 10  # vec_id < 10 are the query vectors
-
-
-def _dot(a: Column, b: Column) -> Column:
-    """Sequential left-to-right double fold — order-deterministic (bit-equal to the
-    DuckDB oracle's list_reduce)."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0),
-                       lambda acc, x: acc + x)
-
-
-def _norm2(a: Column) -> Column:
-    return F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
 
 
 _DUCK_DOT = ("list_reduce(list_transform(range(1, len({a}) + 1), "
@@ -86,7 +77,7 @@ def _spark_topk(spark: SparkSession, sf_dir: str, same_label: bool) -> DataFrame
     v = (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label")
-        .withColumn("nrm", F.sqrt(_norm2(F.col("emb"))))
+        .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
         .filter(valid_nrm(F.col("nrm")))  # embgate, free off the existing fold
     )
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
@@ -98,7 +89,7 @@ def _spark_topk(spark: SparkSession, sf_dir: str, same_label: bool) -> DataFrame
         cond = cond & (q.qlabel == v.label)
     scored = (
         v.join(F.broadcast(q), cond)
-        .withColumn("cos", _dot(F.col("qemb"), F.col("emb")) / (F.col("qnrm") * F.col("nrm")))
+        .withColumn("cos", dot(F.col("qemb"), F.col("emb")) / (F.col("qnrm") * F.col("nrm")))
     )
     return _topk_shape(scored)
 
@@ -249,7 +240,7 @@ def simsearch_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        in enumerate(_plane_dot_exprs(one_based=False))])
         .withColumn("bucket", F.expr(_BUCKET_FROM_DOTS))
         .withColumn("weak", F.expr(_WEAK_PLANE))
-        .withColumn("nrm", F.sqrt(_norm2(F.col("emb"))))
+        .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
         .filter(valid_nrm(F.col("nrm")))  # embgate, free off the existing fold
     )
     q = (
@@ -263,7 +254,7 @@ def simsearch_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.join(F.broadcast(q),
                (F.col("query_id") != F.col("vec_id"))
                & (F.col("probe") == F.col("bucket")))
-        .withColumn("cos", _dot(F.col("qemb"), F.col("emb")) / (F.col("qnrm") * F.col("nrm")))
+        .withColumn("cos", dot(F.col("qemb"), F.col("emb")) / (F.col("qnrm") * F.col("nrm")))
     )
     return _topk_shape(scored)
 
@@ -280,7 +271,7 @@ def simsearch_topk_ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
         .withColumn("bucket", F.expr(_bucket_expr(one_based=False)))
-        .withColumn("nrm", F.sqrt(_norm2(F.col("emb"))))
+        .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
         .filter(valid_nrm(F.col("nrm")))  # embgate, free off the existing fold
     )
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
@@ -290,7 +281,7 @@ def simsearch_topk_ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.join(F.broadcast(q),
                (F.col("query_id") != F.col("vec_id"))
                & (F.col("qbucket") == F.col("bucket")))
-        .withColumn("cos", _dot(F.col("qemb"), F.col("emb")) / (F.col("qnrm") * F.col("nrm")))
+        .withColumn("cos", dot(F.col("qemb"), F.col("emb")) / (F.col("qnrm") * F.col("nrm")))
     )
     return _topk_shape(scored)
 
@@ -380,7 +371,7 @@ def simsearch_topk_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (load_table(spark, sf_dir, "embeddings")
          .select("vec_id",
                  F.col("embedding").cast("array<double>").alias("emb"))
-         .withColumn("nrm", F.sqrt(_norm2(F.col("emb"))))
+         .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
          .filter(valid_nrm(F.col("nrm")))
          .select("vec_id",
                  F.expr(_HAM_SIG_SPARK.format(start=1)).alias("sig_lo"),
@@ -467,7 +458,7 @@ def decontaminate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     v = (load_table(spark, sf_dir, "embeddings")
          .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-         .withColumn("nrm", F.sqrt(_norm2(F.col("emb"))))
+         .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
          .filter(valid_nrm(F.col("nrm"))))
     is_eval = ((F.col("vec_id") % DECON_MOD == 0)
                & (F.col("vec_id") < DECON_EVAL_CAP))
@@ -476,7 +467,7 @@ def decontaminate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("emb").alias("bemb"), F.col("nrm").alias("bnrm")))
     train = v.filter(~is_eval)
     scored = (train.crossJoin(F.broadcast(bench))
-              .withColumn("cos", _dot(F.col("emb"), F.col("bemb"))
+              .withColumn("cos", dot(F.col("emb"), F.col("bemb"))
                           / (F.col("nrm") * F.col("bnrm"))))
     return (ranked_topk(scored.select("vec_id", "eval_id", "cos"),
                         "vec_id", "cos", "eval_id", 1, ascending=False)

@@ -13,15 +13,13 @@ SF = "/root/testdata/sf0.001"
 
 def _train_centroids(spark):
     """The real Lloyd-iteration centroid trainer from kmeans.py (K rows)."""
-    from alertas_spark.operators.kmeans import K, _assign, _update
+    from alertas_spark.operators.kmeans import K, _update, lloyd
     from alertas_spark.operators.embgate import valid_embeddings
     from alertas_spark.sources.catalog import load_table
 
     v = valid_embeddings(load_table(spark, SF, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-    c0 = v.filter(F.col("vec_id") < K).select(
-        F.col("vec_id").alias("cid"), F.col("emb").alias("cvec"))
-    return _update(_assign(v, c0)).localCheckpoint()
+    return _update(lloyd(v, K, 1)).localCheckpoint()
 
 
 def test_train_once_then_load(spark, tmp_path):

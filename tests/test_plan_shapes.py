@@ -7,7 +7,13 @@ properties the scale design depends on, per operator family.
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 SF = "/root/testdata/sf0.01"
+#: plans whose build pulls and trains codebooks are checked at the small scale
+SF_SMALL = os.path.join(os.path.dirname(SF), "sf0.001")
 
 
 def _plan(df) -> str:
@@ -18,10 +24,10 @@ def _plan(df) -> str:
         df._jdf.queryExecution(), "simple")
 
 
-def _build(spark, name: str):
+def _build(spark, name: str, sf: str = SF):
     from alertas_spark.registry import load_all
 
-    return load_all()[name].builder(spark, SF)
+    return load_all()[name].builder(spark, sf)
 
 
 def test_range_bin_join_is_equi_not_nested_loop(spark):
@@ -143,12 +149,32 @@ def test_dedup_incremental_reuses_the_fingerprint_exchange(spark):
 
 def test_pq_encode_is_scan_side_after_codebook_build(spark):
     plan = _plan(_build(spark, "pq_encode"))
-    # the ONLY exchanges are the 16-row codebook global agg + its broadcast back;
-    # the encoding pass over the corpus never shuffles data
-    assert plan.count("Exchange") == 2, plan.count("Exchange")
-    assert plan.count("BroadcastExchange") == 1
-    for join_node in ("SortMergeJoin", "ShuffledHashJoin"):
+    # the seed codebook is a bounded driver pull baked into a literal: the
+    # encoding pass over the corpus neither shuffles nor broadcasts nor joins
+    assert plan.count("Exchange") == 0, plan.count("Exchange")
+    assert plan.count("BroadcastExchange") == 0
+    for join_node in ("SortMergeJoin", "ShuffledHashJoin",
+                      "BroadcastHashJoin", "BroadcastNestedLoopJoin"):
         assert join_node not in plan
+
+
+@pytest.mark.parametrize("name", [
+    "kmeans_assign", "pq_encode", "pq_encode_trained",
+    "simsearch_topk_ivf_trained", "simsearch_topk_ivfpq_residual",
+    "simsearch_topk_ivfpq_rerank"])
+def test_codebook_plans_have_no_pair_joins_or_argmin_filters(spark, name):
+    """Every codebook reaches these plans as a literal, so none needs a
+    nested-loop or cartesian join, and no Filter may re-evaluate an argmin:
+    the ``coalesce(cid|c, -1)`` guard makes the argmin keys non-nullable,
+    which stops Catalyst from inferring an ``isnotnull`` over the argmin
+    chain and pushing it below the projection."""
+    import re
+
+    plan = _plan(_build(spark, name, SF_SMALL))
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    filters = re.findall(r"Filter (.*)", plan)
+    assert not [f for f in filters if "array_min(" in f], name
 
 
 def test_pq_adc_topk_shuffles_only_for_the_window(spark):
