@@ -68,6 +68,9 @@ PERSISTENT_QUERIES = frozenset({
     "simsearch_topk_ivf_trained",   # kmeans.py trained assignment table
     "pq_encode_trained",            # pq.py trained codebook
     "simsearch_recall_dashboard",   # consumes both trained paths
+    "dedup_embedding_semantic",     # semantic.py cells = the trained assignment
+    "simsearch_topk_ivfpq_residual",  # pq.py IVFADC coarse + residual codebooks
+    "simsearch_topk_ivfpq_rerank",  # same two IVFADC artifacts, exact re-rank
     "bpe_train_merges",             # bpe.py trained merge table
     "bpe_token_count",              # applies the bpe_merges artifact
     "bpe_token_count_builtin",      # same artifact, codegen apply tier

@@ -5,8 +5,12 @@ Runs every declared query at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0
 
     {"metric": "...", "value": <total_sec>, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is forced with the noop sink (full computation, no driver collect) —
-measuring the engine, not result serialization.
+Every timing goes through ``tools/probe.py``, the one cold-run protocol
+(fixture pre-read, session warm-up, memo cleared before each timed run, noop
+sink, per-query job group).  Each query's Spark counters from its min-wall
+cold pass (jobs, executed stages, executor CPU, shuffle bytes and records,
+job-covered and driver-gap seconds) go to BENCH_LOCAL.json under
+``counters``; the stdout line is the same record without them.
 """
 
 from __future__ import annotations
@@ -15,97 +19,28 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
+    from alertas_spark.operators import artifacts, memo
+    from alertas_spark.plans.alert_corpus import FIXTURE_DIR
+    from tools.probe import Probe
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    from alertas_spark.registry import load_all
-    from alertas_spark.session import get_spark
-
-    spark = get_spark("alertas-bench")
-    registry = load_all()
-
-    # Pre-touch every fixture byte and RECORD the observed read rate (r15
-    # postmortem: four same-head runs spread 239.7-297.0 s and the committed
-    # record was the cold-page-cache outlier, manufacturing 5x phantom
-    # per-query regressions).  Reading the files here (a) makes every record
-    # page-cache-WARM by construction — a cold-cache record can no longer be
-    # produced, let alone committed — and (b) stamps the evidence: warm
-    # reads run at RAM speed (GB/s), a cold first touch at disk speed.
-    cache_state = {"prewarm_mb": 0.0, "prewarm_mb_per_s": None,
-                   "initial": "unknown"}
-    try:
-        import glob as _glob
-        nbytes, t0 = 0, time.time()
-        for pat in (os.path.join(sf_dir, "*.parquet"),
-                    os.path.join(sf_dir, "*.parquet", "*.parquet")):
-            for f in _glob.glob(pat):
-                if os.path.isfile(f):
-                    with open(f, "rb") as fh:
-                        # count actual chunk lengths: charging a full 4 MiB
-                        # for the final partial chunk inflates the rate by
-                        # up to 4 MiB per file, enough to mislabel a cold
-                        # run "warm" over many small files (r16 advice)
-                        while (chunk := fh.read(1 << 22)):
-                            nbytes += len(chunk)
-        dt = max(time.time() - t0, 1e-9)
-        rate = nbytes / dt / 1e6
-        cache_state = {"prewarm_mb": round(nbytes / 1e6, 1),
-                       "prewarm_mb_per_s": round(rate, 1),
-                       # ~RAM speed → the cache was already warm; disk-bound
-                       # → this run started cold and THIS read warmed it
-                       "initial": "warm" if rate > 1500 else "cold"}
-    except Exception as ex:
-        print(f"# fixture prewarm skipped: {ex}", file=sys.stderr)
-
-    # warm the JVM/Python workers so per-query numbers measure steady-state
-    spark.range(1000).selectExpr("sum(id)").collect()
-    # ... and the alert-corpus shared context (fixture generation + cached base
-    # views): that is per-SESSION infrastructure amortized across 20 alert queries,
-    # not per-query cost — without this the first alert in registry order absorbs
-    # all of it (~10 s) and round-over-round diffs misattribute it as a regression.
-    try:
-        from alertas_spark.plans.alert_corpus import _ctx
-
-        _ctx(spark).view("documentos_ativos").count()
-    except Exception as ex:
-        print(f"# bench warmup skipped: {ex}", file=sys.stderr)
-
-    # One untimed WARMUP QUERY per session (r16 verdict item 1): the first
-    # timed query of a session otherwise absorbs whole-stage-codegen, noop-sink
-    # and Arrow-worker warmup (~2x measured on heavy queries; the r16 record's
-    # 10x multiprobe phantom was first-query-of-session warmup under load).
-    # The warmup runs a real corpus query end-to-end plus one pandas_udf
-    # round-trip so both the codegen and the Arrow paths are hot before any
-    # clock starts.
-    try:
-        from alertas_spark.operators import memo as _memo_wu
-        from alertas_spark.operators import artifacts as _art_wu
-
-        # first query WITHOUT persistent artifacts: a persistent-tier warmup
-        # would build and store that query's artifacts before its own "cold"
-        # timing, understating it (r17 advice)
-        _first = next(n for n in registry
-                      if n not in _art_wu.PERSISTENT_QUERIES)
-        registry[_first].builder(spark, sf_dir) \
-            .write.format("noop").mode("overwrite").save()
-        _memo_wu.clear()
-        from pyspark.sql.functions import pandas_udf as _pudf
-
-        # lambda form: a def with local type hints is stringified by
-        # `from __future__ import annotations` and pandas_udf can't
-        # resolve the local alias
-        _wu = _pudf(lambda s: s, "long")
-        spark.range(1000).select(_wu("id")) \
-            .write.format("noop").mode("overwrite").save()
-    except Exception as ex:
-        print(f"# bench query warmup skipped: {ex}", file=sys.stderr)
+    # The probe pre-touches every fixture byte and RECORDS the observed read
+    # rate (r15 postmortem: four same-head runs spread 239.7-297.0 s and the
+    # committed record was the cold-page-cache outlier, manufacturing 5x
+    # phantom per-query regressions), then runs one untimed warm-up query
+    # and one Arrow round-trip (r16 verdict item 1: the first timed query of
+    # a session otherwise absorbs codegen, noop-sink and Arrow-worker warmup;
+    # the r16 record's 10x multiprobe phantom was exactly that).
+    probe = Probe("alertas-bench", sf_dir)
+    spark = probe.spark
 
     # Prior committed record, read BEFORE this run overwrites it: the >3x
     # swing guard below re-times any apparent regression standalone instead
@@ -117,16 +52,6 @@ def main() -> None:
             prior_record = json.load(fh)
     except Exception:
         pass
-
-    # Per-query time = min of two COLD passes: a single sample conflates the query
-    # with whatever the machine was doing that second (observed 1.5-2x whole-corpus
-    # swings between back-to-back runs), and the min is the steady-state cost the
-    # plan actually has.  COLD means the session-scoped trained-artifact memo
-    # (operators/memo.py) is cleared before every timed run, so each query pays its
-    # full standalone cost — kmeans training, PQ codebooks, dashboard truth sets —
-    # and min-of-2 stays purely a machine-noise guard, never a cache-warmth
-    # artifact.  The corpus metric is the sum of per-query cold minima.
-    from alertas_spark.operators import memo
 
     # Queries whose pre-r7 bench numbers were contaminated by Spark's
     # canonicalized-subplan cache: operator-internal .cache() calls (the ngram
@@ -141,23 +66,18 @@ def main() -> None:
         "pipeline_clean_corpus", "pipeline_clean_corpus_v2",
     ]
 
-    timings: dict[str, float] = {}
-    memoized: set[str] = set()
-    for _pass in range(2):
-        for name, q in registry.items():
-            memo.clear()
-            t0 = time.time()
-            try:
-                q.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                t = round(time.time() - t0, 3)
-            except Exception as ex:  # keep the bench line parseable even on one failure
-                t = -1.0
-                print(f"# bench error {name}: {ex}", file=sys.stderr)
-            if memo.artifact_count():
-                memoized.add(name)
-            prev = timings.get(name)
-            timings[name] = -1.0 if (t < 0 or (prev is not None and prev < 0)) \
-                else min(t, prev) if prev is not None else t
+    # Per-query time = min of two COLD passes: a single sample conflates the query
+    # with whatever the machine was doing that second (observed 1.5-2x whole-corpus
+    # swings between back-to-back runs), and the min is the steady-state cost the
+    # plan actually has.  COLD means the session-scoped trained-artifact memo
+    # (operators/memo.py) is cleared before every timed run, so each query pays its
+    # full standalone cost — kmeans training, PQ codebooks, dashboard truth sets —
+    # and min-of-2 stays purely a machine-noise guard, never a cache-warmth
+    # artifact.  The corpus metric is the sum of per-query cold minima.
+    counters = probe.min_over_passes(list(probe.registry), 2)
+    timings = {name: rec.pop("wall") for name, rec in counters.items()}
+    memoized = {name for name, rec in counters.items()
+                if rec.get("memo.artifact_count")}
 
     # >3x swing guard (r16 verdict item 1c): a per-query regression beyond 3x
     # vs the prior committed record on IDENTICAL fixtures is, on this repo's
@@ -168,10 +88,8 @@ def main() -> None:
     # instead of the phantom.
     retimed: dict[str, dict] = {}
     try:
-        from alertas_spark.operators.artifacts import dataset_fingerprint as _dfp
-
         same_fixtures = prior_record.get("fixtures") and all(
-            prior_record["fixtures"].get(t) == _dfp(sf_dir, t)
+            prior_record["fixtures"].get(t) == artifacts.dataset_fingerprint(sf_dir, t)
             for t in prior_record["fixtures"])
         if same_fixtures:
             prior_q = prior_record.get("queries") or {}
@@ -179,20 +97,13 @@ def main() -> None:
                 old = prior_q.get(name)
                 if old is None or old < 1.0 or t <= 3 * old:
                     continue
-                samples = []
-                for _p in range(2):
-                    memo.clear()
-                    t0 = time.time()
-                    try:
-                        registry[name].builder(spark, sf_dir) \
-                            .write.format("noop").mode("overwrite").save()
-                        samples.append(round(time.time() - t0, 3))
-                    except Exception:
-                        break
-                if samples:
-                    retimed[name] = {"in_loop": t, "standalone": samples,
-                                     "prior": old}
-                    timings[name] = min(t, *samples)
+                try:
+                    samples = [probe.cold_run(name)["wall"] for _p in range(2)]
+                except Exception:
+                    continue
+                retimed[name] = {"in_loop": t, "standalone": samples,
+                                 "prior": old}
+                timings[name] = min(t, *samples)
     except Exception as ex:
         print(f"# bench swing guard skipped: {ex}", file=sys.stderr)
 
@@ -205,13 +116,9 @@ def main() -> None:
     # warms its memo; no cross-query sharing is staged here.
     warm: dict[str, float] = {}
     for name in memoized:
-        memo.clear()
-        q = registry[name]
         try:
-            q.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            t0 = time.time()
-            q.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            warm[name] = round(time.time() - t0, 3)
+            probe.cold_run(name)
+            warm[name] = probe.timed_run(name)["wall"]
         except Exception as ex:
             warm[name] = -1.0
             print(f"# bench warm error {name}: {ex}", file=sys.stderr)
@@ -229,8 +136,6 @@ def main() -> None:
         import shutil
         import tempfile
 
-        from alertas_spark.operators import artifacts as _art
-
         art_dir = tempfile.mkdtemp(prefix="bench_artifacts_")
         try:
             # only the queries whose paths actually persist artifacts
@@ -239,35 +144,29 @@ def main() -> None:
             # that it persists nothing doubled this tier's cost.  A declared
             # persistent query that did NOT memoize in the cold loop would be
             # silently dropped from the tier — surface it instead.
-            dropped = _art.PERSISTENT_QUERIES - memoized
+            dropped = artifacts.PERSISTENT_QUERIES - memoized
             if dropped:
                 print(f"# bench persistent tier: declared-persistent queries "
                       f"missing from the memoized set (not timed): "
                       f"{sorted(dropped)}", file=sys.stderr)
-            for name in sorted(memoized & _art.PERSISTENT_QUERIES):
-                q = registry[name]
-                memo.clear()
+            for name in sorted(memoized & artifacts.PERSISTENT_QUERIES):
                 # per-query store root: artifacts persisted by an earlier
                 # query in this loop must not mask a later query's own
                 # populate step (shared roots make build_count stay flat)
-                spark.conf.set(_art.CONF_KEY, os.path.join(art_dir, name))
-                b0 = _art.build_count()
+                spark.conf.set(artifacts.CONF_KEY, os.path.join(art_dir, name))
+                b0 = artifacts.build_count()
                 try:
-                    q.builder(spark, sf_dir).write.format("noop") \
-                        .mode("overwrite").save()  # populates the store
-                    if _art.build_count() == b0:
+                    probe.cold_run(name)  # populates the store
+                    if artifacts.build_count() == b0:
                         continue  # nothing persistent in this query's path
                     # min of 2, same machine-noise guard as the cold loop:
                     # this tier was a SINGLE sample through r10, and one GC
                     # pause in the end-of-bench session faked a 5.2->20.8s
                     # "regression" (r10 verdict #2; a controlled re-run of
-                    # the identical protocol measured 5.0-6.1s)
+                    # the identical protocol measured 5.0-6.1s).  Each cold
+                    # run simulates a new session: memo cold, store warm.
                     for _p in range(2):
-                        memo.clear()  # new-session simulation: memo cold,
-                        t0 = time.time()  # store warm
-                        q.builder(spark, sf_dir).write.format("noop") \
-                            .mode("overwrite").save()
-                        t = round(time.time() - t0, 3)
+                        t = probe.cold_run(name)["wall"]
                         persistent[name] = min(persistent.get(name, t), t)
                 except Exception as ex:
                     # a transient second-pass failure must not erase a valid
@@ -277,7 +176,7 @@ def main() -> None:
                     print(f"# bench persistent error {name}: {ex}",
                           file=sys.stderr)
         finally:
-            spark.conf.unset(_art.CONF_KEY)
+            spark.conf.unset(artifacts.CONF_KEY)
             shutil.rmtree(art_dir, ignore_errors=True)
             memo.clear()
     except Exception as ex:
@@ -285,58 +184,27 @@ def main() -> None:
 
     # The nightly-batch e2e: all active alerts computed, staged and published
     # through the engine (incl. the S7-S11 publication sinks the per-query loop
-    # never exercises).  One pass, wall-clock — mirrors the reference's
-    # Timer-phased generateAlertas run.
+    # never exercises) — mirrors the reference's Timer-phased generateAlertas
+    # run.  Min of 2 full passes, same machine-noise guard as the per-query
+    # loop: single samples of this ~20s e2e batch swung 16.6→32.7s on
+    # unchanged code.
     alert_batch = -1.0
     try:
-        import shutil
-        import tempfile
-
-        from alertas_spark.framework import engine
-        from alertas_spark.framework.context import AlertContext
-        from alertas_spark.testing.fixtures import AS_OF, ensure_fixtures
-
-        fixture_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                   ".fixtures", "mprj")
-        ensure_fixtures(fixture_dir)
-        wh = tempfile.mkdtemp(prefix="bench_wh_")
-        try:
-            for schema in ("exadata", "exadata_aux", "opengeo", "alertas_compras"):
-                os.symlink(os.path.join(fixture_dir, schema),
-                           os.path.join(wh, schema))
-            os.makedirs(os.path.join(wh, "alertas"))
-            # min of 2 full passes, same machine-noise guard as the per-query
-            # loop: single samples of this ~20s e2e batch swung 16.6→32.7s on
-            # unchanged code; each pass rebuilds the cached base views and
-            # rewrites every sink (cold), so the min is protocol-clean
-            for _pass in range(2):
-                spark.catalog.clearCache()
-                ctx = AlertContext(spark=spark, warehouse=wh, as_of=AS_OF)
-                t0 = time.time()
-                engine.run_all(ctx, quiet=True)
-                t = round(time.time() - t0, 3)
-                alert_batch = t if alert_batch < 0 else min(alert_batch, t)
-            # Same >3x swing guard as the per-query tier (r17 verdict item 4:
-            # the batch number previously sat outside both the guard and the
-            # movers annotation, so a 1.42x machine-state swing went
-            # unflagged).  A >3x regression vs the prior committed record is
-            # re-timed with one extra full pass and annotated under
-            # 'retimed' exactly like a query.
-            prior_batch = prior_record.get("alert_batch_wall_clock")
-            if (prior_batch is not None and prior_batch >= 1.0
-                    and alert_batch > 3 * prior_batch):
-                spark.catalog.clearCache()
-                ctx = AlertContext(spark=spark, warehouse=wh, as_of=AS_OF)
-                t0 = time.time()
-                engine.run_all(ctx, quiet=True)
-                t = round(time.time() - t0, 3)
-                retimed["alert_batch_wall_clock"] = {
-                    "in_loop": alert_batch, "standalone": [t],
-                    "prior": prior_batch}
-                alert_batch = min(alert_batch, t)
-        finally:
-            spark.catalog.clearCache()
-            shutil.rmtree(wh, ignore_errors=True)
+        alert_batch, _ = probe.alert_batch(FIXTURE_DIR, 2)
+        # Same >3x swing guard as the per-query tier (r17 verdict item 4:
+        # the batch number previously sat outside both the guard and the
+        # movers annotation, so a 1.42x machine-state swing went
+        # unflagged).  A >3x regression vs the prior committed record is
+        # re-timed with one extra full pass and annotated under
+        # 'retimed' exactly like a query.
+        prior_batch = prior_record.get("alert_batch_wall_clock")
+        if (prior_batch is not None and prior_batch >= 1.0
+                and alert_batch > 3 * prior_batch):
+            t, _ = probe.alert_batch(FIXTURE_DIR, 1)
+            retimed["alert_batch_wall_clock"] = {
+                "in_loop": alert_batch, "standalone": [t],
+                "prior": prior_batch}
+            alert_batch = min(alert_batch, t)
     except Exception as ex:
         print(f"# bench alert-batch skipped: {ex}", file=sys.stderr)
     # The recorder keeps the TAIL of this line: serialize queries ascending-by-time
@@ -350,18 +218,17 @@ def main() -> None:
     # fixtures showed the r8 code FASTER on every one; SCALING.md).  Recording
     # the input identity lets bench_diff gate cross-round comparison on it.
     try:
-        from alertas_spark.operators.artifacts import dataset_fingerprint
-
-        fixtures = {t: dataset_fingerprint(sf_dir, t)
+        fixtures = {t: artifacts.dataset_fingerprint(sf_dir, t)
                     for t in ("region", "nation", "customer", "supplier",
                               "part", "orders", "lineitem", "events",
                               "documents", "embeddings")}
     except Exception:
         fixtures = {}
     record = {
-        "cache_state": cache_state,
+        "cache_state": probe.cache_state,
         "retimed": retimed,  # >3x swings vs the prior record, re-timed standalone
         "queries": dict(sorted(timings.items(), key=lambda kv: kv[1])),
+        "counters": dict(sorted(counters.items())),
         "fixtures": fixtures,
         "queries_warm_shared_artifacts": dict(sorted(warm.items())),
         "queries_warm_persistent": dict(sorted(persistent.items())),
@@ -388,7 +255,11 @@ def main() -> None:
                      "single noisy run.  "
                      "per-query = min of 2 COLD passes (trained-artifact memo "
                      "cleared before every timed run, so min-of-2 is purely a "
-                     "machine-noise guard).  MEASURED whole-corpus noise band "
+                     "machine-noise guard); counters = the Spark counters of "
+                     "each query's min-wall cold pass (tools/probe.py: "
+                     "spark.stages counts executed stages, skipped ones "
+                     "excluded); each alert-batch pass runs over a fresh "
+                     "warehouse.  MEASURED whole-corpus noise band "
                      "on unchanged code + byte-identical fixtures: up to 1.25x "
                      "total wall-clock between runs under differing background "
                      "load (r11: builder-at-head 204.2s vs driver 164.2s, same "
@@ -430,7 +301,7 @@ def main() -> None:
                            "BENCH_LOCAL.json"), "w") as fh:
         json.dump(record, fh, indent=1)
         fh.write("\n")
-    print(json.dumps(record))
+    print(json.dumps({k: v for k, v in record.items() if k != "counters"}))
 
 
 if __name__ == "__main__":

@@ -272,3 +272,9 @@ def test_overlap_concurrent_builds_memoize_once(spark):
     except RuntimeError as ex:
         assert "axis failed" in str(ex)
     memo.clear()
+    # value artifacts count too: bench's warm tiers find the queries that
+    # memoize only driver rows through this count
+    memo.session_value(spark, ("ovl_test", "rows"), lambda: [1, 2])
+    assert memo.artifact_count() == 1
+    memo.clear()
+    assert memo.artifact_count() == 0

@@ -3,8 +3,9 @@
 Builds a synthetic N× replica of the sf0.1 tables (shifted ids, per-replica text
 mutation so dedup structure stays realistic instead of collapsing into N-sized
 exact-dup cliques, jittered embeddings so ANN buckets stay populated), then times
-headline operators COLD (trained-artifact memo cleared per run) at 1× and N× and
-reports the time ratio.
+headline operators COLD at 1× and N× and reports the time ratio.  Every query
+and alert-batch time comes from ``tools/probe.py`` (the cold-run protocol:
+warmed session, memo cleared per run, noop sink, min of 2 passes).
 
 Reading the ratios: ideal data-parallel scaling on a fixed 32-thread box is
 ≤ N× time for N× rows; meaningfully sublinear means fixed overhead dominates at
@@ -23,7 +24,6 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import time
 
 import duckdb
 
@@ -306,79 +306,30 @@ def build_alert_replica(n: int) -> str:
     return out
 
 
-def timed_alert(spark, warehouse: str, sigla: str) -> tuple[float, int]:
-    """One cold run of an alert builder over ``warehouse`` (fresh context: the
-    cached base views and the in-builder tempo cache are rebuilt, the detail
-    sink rewritten — the full nightly cost of that alert)."""
-    from alertas_spark.framework.context import AlertContext
-    from alertas_spark.framework.engine import registry
-    from alertas_spark.testing.fixtures import AS_OF
-
-    spark.catalog.clearCache()
-    ctx = AlertContext(spark=spark, warehouse=warehouse, as_of=AS_OF)
-    t0 = time.time()
-    n = registry()[sigla].builder(ctx).count()
-    dt = round(time.time() - t0, 2)
-    spark.catalog.clearCache()
-    return dt, n
+def timed(probe, name: str, sf_dir: str) -> tuple[float, int]:
+    """(seconds, output rows): the min of 2 cold runs, which FORCE the full
+    plan through the noop sink — ``.count()`` would let Catalyst prune
+    unreferenced projections (a row_number window vanished entirely: 0.12 s
+    flat for running_total_per_customer at both scales before this fix).  Row
+    counts are taken in a separate untimed action (pruning is fine for
+    cardinality) and let the report distinguish output-bound growth (near-dup
+    PAIR operators emit quadratically more pairs when the data genuinely
+    contains bigger dup cliques — runtime tracking output is optimal) from an
+    actual plan blowup."""
+    secs = round(probe.min_over_passes([name], 2, sf_dir)[name]["wall"], 2)
+    return secs, probe.registry[name].builder(probe.spark, sf_dir).count()
 
 
-#: (builder, sf_dir) → output rows, counted once per pair (untimed; rerunning
-#: the heavy pair queries just for cardinality would double probe wall-clock)
-_ROWS_CACHE: dict = {}
-
-
-def timed(spark, builder, sf_dir: str) -> tuple[float, int]:
-    """(seconds, output rows) for one cold run.  Timing FORCES the full plan
-    through the noop sink — ``.count()`` would let Catalyst prune unreferenced
-    projections (a row_number window vanished entirely: 0.12 s flat for
-    running_total_per_customer at both scales before this fix).  Row counts are
-    taken in a separate untimed action (pruning is fine for cardinality) and
-    let the report distinguish output-bound growth (near-dup PAIR operators
-    emit quadratically more pairs when the data genuinely contains bigger dup
-    cliques — runtime tracking output is optimal) from an actual plan blowup."""
-    from alertas_spark.operators import memo
-
-    memo.clear()  # cold: include training/artifact cost every run
-    t0 = time.time()
-    builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    dt = round(time.time() - t0, 2)
-    key = (builder, sf_dir)
-    if key not in _ROWS_CACHE:
-        _ROWS_CACHE[key] = builder(spark, sf_dir).count()  # memo left warm
-    return dt, _ROWS_CACHE[key]
-
-
-def timed_alert_batch(spark, inputs_dir: str) -> tuple[float, dict[str, float]]:
-    """One cold full-batch run — every ACTIVE alert computed, staged and
-    published through the engine (the reference's nightly generateAlertas
-    unit of work, including the shared documentos_ativos base views and the
-    S7-S11 publication sinks) — over a fresh temp warehouse whose input
-    schemas are symlinked from ``inputs_dir``.  Returns (total_seconds,
-    per-phase timings)."""
-    import shutil
-    import tempfile
-
-    from alertas_spark.framework import engine
-    from alertas_spark.framework.context import AlertContext
-    from alertas_spark.testing.fixtures import AS_OF
-
-    wh = tempfile.mkdtemp(prefix="probe_wh_")
-    try:
-        for schema in os.listdir(inputs_dir):
-            if schema != "alertas" and os.path.isdir(os.path.join(inputs_dir, schema)):
-                os.symlink(os.path.join(inputs_dir, schema),
-                           os.path.join(wh, schema))
-        os.makedirs(os.path.join(wh, "alertas"))
-        spark.catalog.clearCache()
-        ctx = AlertContext(spark=spark, warehouse=wh, as_of=AS_OF)
-        t0 = time.time()
-        phases = engine.run_all(ctx, quiet=True)
-        total = round(time.time() - t0, 2)
-        return total, phases
-    finally:
-        spark.catalog.clearCache()
-        shutil.rmtree(wh, ignore_errors=True)
+def ratio_row(label: str, scale: int, one: tuple[float, int],
+              big: tuple[float, int]) -> tuple:
+    """Prints and returns (label, 1x sec, Nx sec, time ratio, 1x rows, Nx
+    rows, rows ratio) from the (seconds, rows) pairs at 1x and at ``scale``."""
+    (t1, r1), (tn, rn) = one, big
+    tr = round(tn / t1, 2) if t1 > 0 else float("inf")
+    rr = round(rn / r1, 2) if r1 > 0 else float("inf")
+    print(f"{label:34s} 1x={t1:6.2f}s  {scale}x={tn:6.2f}s  time_ratio={tr:6.2f}  "
+          f"rows {r1}->{rn} (x{rr})")
+    return (label, t1, tn, tr, r1, rn, rr)
 
 
 def alert_batch_probe(n: int) -> int:
@@ -387,21 +338,13 @@ def alert_batch_probe(n: int) -> int:
     per-phase breakdown printed for both so growth attributes to named
     alerts (shared base-view cost lands in the first alert that builds it)."""
     from alertas_spark.plans.alert_corpus import FIXTURE_DIR
-    from alertas_spark.session import get_spark
-    from alertas_spark.testing.fixtures import ensure_fixtures
+    from tools.probe import Probe
 
-    ensure_fixtures(FIXTURE_DIR)
-    spark = get_spark("scale-probe-batch")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    probe = Probe("scale-probe-batch", SRC)
     big = build_alert_replica(n)
     results = {}
     for label, src in (("1x", FIXTURE_DIR), (f"{n}x", big)):
-        best_total, best_phases = None, None
-        for _ in range(2):
-            total, phases = timed_alert_batch(spark, src)
-            if best_total is None or total < best_total:
-                best_total, best_phases = total, phases
-        results[label] = (best_total, best_phases)
+        best_total, best_phases = results[label] = probe.alert_batch(src, 2)
         print(f"alert_batch {label}: {best_total:.2f}s")
         for phase, secs in sorted(best_phases.items(), key=lambda kv: -kv[1]):
             print(f"  {phase:28s} {secs:7.2f}s")
@@ -415,61 +358,33 @@ def main() -> int:
     only = sys.argv[2:]
     if only == ["alert_batch"]:
         return alert_batch_probe(n)
-    from alertas_spark.registry import load_all
-    from alertas_spark.session import get_spark
+    from tools.probe import Probe
 
     shutil.rmtree(WORK, ignore_errors=True)
     big = build_replica(n)
-    spark = get_spark("scale-probe")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    reg = load_all()
+    probe = Probe("scale-probe", SRC)
 
-    rows = []
-    for name in (only or QUERIES):
-        b = reg[name].builder
-        t1, r1 = min(timed(spark, b, SRC) for _ in range(2))
-        tn, rn = min(timed(spark, b, big) for _ in range(2))
-        tr = round(tn / t1, 2) if t1 > 0 else float("inf")
-        rr = round(rn / r1, 2) if r1 > 0 else float("inf")
-        rows.append((name, t1, tn, tr, r1, rn, rr))
-        print(f"{name:34s} 1x={t1:6.2f}s  {n}x={tn:6.2f}s  time_ratio={tr:6.2f}  "
-              f"rows {r1}->{rn} (x{rr})")
+    rows = [ratio_row(name, n, timed(probe, name, SRC), timed(probe, name, big))
+            for name in (only or QUERIES)]
 
     stream_rows, alert_rows, graph_rows = [], [], []
     if not only:
         graph_big = build_graph_replica(n)
-        for name in GRAPH_QUERIES:
-            b = reg[name].builder
-            t1, r1 = min(timed(spark, b, SRC) for _ in range(2))
-            tn, rn = min(timed(spark, b, graph_big) for _ in range(2))
-            tr = round(tn / t1, 2) if t1 > 0 else float("inf")
-            rr = round(rn / r1, 2) if r1 > 0 else float("inf")
-            graph_rows.append((name, t1, tn, tr, r1, rn, rr))
-            print(f"{name:34s} 1x={t1:6.2f}s  {n}x={tn:6.2f}s  "
-                  f"time_ratio={tr:6.2f}  rows {r1}->{rn} (x{rr})")
+        graph_rows = [ratio_row(name, n, timed(probe, name, SRC),
+                                timed(probe, name, graph_big))
+                      for name in GRAPH_QUERIES]
 
         deep = build_events_replica(STREAM_N)
-        for name in STREAM_QUERIES:
-            b = reg[name].builder
-            t1, r1 = min(timed(spark, b, SRC) for _ in range(2))
-            tn, rn = min(timed(spark, b, deep) for _ in range(2))
-            tr = round(tn / t1, 2) if t1 > 0 else float("inf")
-            rr = round(rn / r1, 2) if r1 > 0 else float("inf")
-            stream_rows.append((name, t1, tn, tr, r1, rn, rr))
-            print(f"{name:34s} 1x={t1:6.2f}s  {STREAM_N}x={tn:6.2f}s  "
-                  f"time_ratio={tr:6.2f}  rows {r1}->{rn} (x{rr})")
+        stream_rows = [ratio_row(name, STREAM_N, timed(probe, name, SRC),
+                                 timed(probe, name, deep))
+                       for name in STREAM_QUERIES]
 
         from alertas_spark.plans.alert_corpus import FIXTURE_DIR
         alert_big = build_alert_replica(n)
-        for sigla in ALERT_PROBES:
-            t1, r1 = min(timed_alert(spark, FIXTURE_DIR, sigla) for _ in range(2))
-            tn, rn = min(timed_alert(spark, alert_big, sigla) for _ in range(2))
-            tr = round(tn / t1, 2) if t1 > 0 else float("inf")
-            rr = round(rn / r1, 2) if r1 > 0 else float("inf")
-            label = f"alerta_{sigla.lower()}"
-            alert_rows.append((label, t1, tn, tr, r1, rn, rr))
-            print(f"{label:34s} 1x={t1:6.2f}s  {n}x={tn:6.2f}s  "
-                  f"time_ratio={tr:6.2f}  rows {r1}->{rn} (x{rr})")
+        alert_rows = [
+            ratio_row(f"alerta_{sigla.lower()}", n, probe.alert_run(FIXTURE_DIR, sigla, 2),
+                      probe.alert_run(alert_big, sigla, 2))
+            for sigla in ALERT_PROBES]
 
     if not only:
         with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
